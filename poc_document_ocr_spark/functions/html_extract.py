@@ -275,12 +275,19 @@ class _OffsetParser(HTMLParser):
         self.coll.emit(self._abs(), len(data), data)
 
     def handle_entityref(self, name):
-        src = f"&{name};"
-        self.coll.emit(self._abs(), len(src), unescape(src))
+        self._emit_ref("&", name)
 
     def handle_charref(self, name):
-        src = f"&#{name};"
-        self.coll.emit(self._abs(), len(src), unescape(src))
+        self._emit_ref("&#", name)
+
+    def _emit_ref(self, opener: str, name: str) -> None:
+        # the span covers the consumed source: a ref may end without ';'
+        # (``&amp Jerry``), and then its terminator is not part of it
+        start = self._abs()
+        n = len(opener) + len(name)
+        if self._text.startswith(";", start + n):
+            n += 1
+        self.coll.emit(start, n, unescape(f"{opener}{name};"))
 
 
 # ---------------------------------------------------------------------------
@@ -446,11 +453,12 @@ def _fast_goahead(
             mm = charref.match(text, i)
             if mm:
                 name = mm.group()[2:-1]
-                src = f"&#{name};"
-                emit(i, len(src), _ref_decode(src))
                 k = mm.end()
                 if not startswith(";", k - 1):
                     k = k - 1
+                # the span covers the consumed source: without a ';' the
+                # terminator is not part of the ref
+                emit(i, k - i, _ref_decode(f"&#{name};"))
                 i = k
                 continue
             else:
@@ -462,11 +470,10 @@ def _fast_goahead(
             mm = entityref.match(text, i)
             if mm:
                 name = mm.group(1)
-                src = f"&{name};"
-                emit(i, len(src), _ref_decode(src))
                 k = mm.end()
                 if not startswith(";", k - 1):
                     k = k - 1
+                emit(i, k - i, _ref_decode(f"&{name};"))
                 i = k
                 continue
             mm = incomplete.match(text, i)

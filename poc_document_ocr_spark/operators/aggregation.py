@@ -38,6 +38,7 @@ from ..schema import (
     MULTI_VALUE_FIELDS,
     SIGNATURE_FIELDS,
 )
+from ..session import per_gateway
 
 __all__ = [
     "with_local_index",
@@ -195,6 +196,11 @@ def parse_ocr_date(raw: Column) -> Column:
 # array expressions over the collected contributions — no pivot, no second
 # aggregation, no headers join. Round-1 measured the pivot+join shape at 4×
 # the cost at local[32]; this shape is one shuffle and stays in codegen.
+#
+# The expression builders below are pure functions of column names, and
+# building one costs hundreds of py4j round trips (the 13 field structs
+# alone ~10k), so each is built once per JVM (``per_gateway``) instead of
+# once per fold plan.
 # ---------------------------------------------------------------------------
 
 
@@ -212,9 +218,10 @@ def _empty_field_struct() -> Column:
     )
 
 
-def _field_struct(cs: Column, name: str) -> Column:
+@per_gateway
+def _field_struct(name: str) -> Column:
     """SchemaField struct for catalog field ``name`` from the document's
-    sorted contributions array ``cs`` (struct<t:int, field, raw, conf>).
+    sorted contributions array ``_cs`` (struct<t:int, field, raw, conf>).
 
     Merge-rule parity with the reference mapper:
 
@@ -227,7 +234,7 @@ def _field_struct(cs: Column, name: str) -> Column:
       confidence over ALL contributors (code behavior);
     * date parse (FR-002a): winner's raw parsed, raw preserved.
     """
-    parts = F.filter(cs, lambda c: c["field"] == name)
+    parts = F.filter(F.col("_cs"), lambda c: c["field"] == name)
     nonws = F.filter(
         parts,
         lambda c: c["raw"].isNotNull() & (F.trim(c["raw"]) != ""),
@@ -299,9 +306,10 @@ def _field_struct(cs: Column, name: str) -> Column:
     )
 
 
-def _header_agg_exprs(id_col: str) -> list[Column]:
+@per_gateway
+def _header_agg_exprs(id_col: str) -> tuple[Column, ...]:
     """The shared per-document header aggregates (both fold paths)."""
-    return [
+    return (
         F.min("ffill_id").alias("identifier_raw"),
         F.count(F.lit(1)).cast("int").alias("turn_count"),
         F.sort_array(F.collect_list("turn_idx")).alias("turn_idxs"),
@@ -315,9 +323,10 @@ def _header_agg_exprs(id_col: str) -> list[Column]:
                 )
             )
         ).alias("provenance"),
-    ]
+    )
 
 
+@per_gateway
 def _doc_key_expr() -> Column:
     """Synthetic-identifier rule shared by both fold paths
     (``DocumentSchemaMapperService.cs:67-71``)."""
@@ -376,7 +385,7 @@ def _consolidate_grouped(
         "first_turn",
         "provenance",
         sig_warnings.alias("sig_warnings"),
-        *[_field_struct(cs, name).alias(name) for name in FIELD_NAMES],
+        *[_field_struct(name).alias(name) for name in FIELD_NAMES],
     )
 
 
@@ -409,19 +418,20 @@ def consolidate_compact(extracted: DataFrame) -> DataFrame:
         "conv_id",
         "turn_idx",
         contributions_array("extracted_text").alias("contribs"),
-    ).withColumn("extracted_id", best_extracted_id(F.col("contribs")))
+    ).withColumn("extracted_id", best_extracted_id("contribs"))
     return _consolidate_grouped(with_runs(t))
 
 
-def _field_struct_from_summary(fs: Column, name: str) -> Column:
+@per_gateway
+def _field_struct_from_summary(name: str) -> Column:
     """SchemaField struct for catalog field ``name`` from the document's
-    per-field summary array ``fs`` (the long fold path's equivalent of
+    per-field summary array ``_fs`` (the long fold path's equivalent of
     :func:`_field_struct` — same merge rules, same quirks, but computed
     from streaming per-field aggregates instead of the full contributions
     array). A missing summary row (field never contributed) falls out as
     the all-null 'Pending' struct through null propagation."""
     # F.get: null (not error) when the field never contributed / fs is null
-    s = F.get(F.filter(fs, lambda x: x["field"] == name), 0)
+    s = F.get(F.filter(F.col("_fs"), lambda x: x["field"] == name), 0)
     best_raw, best_conf = s["best"]["v"], s["best"]["cf"]
 
     if name in SIGNATURE_FIELDS:
@@ -556,7 +566,6 @@ def _consolidate_grouped_long(
         ).alias("_fs")
     )
 
-    fs = F.col("_fs")
     return (
         headers.join(summaries, ["conv_id", "run_id"], "left")
         .select(
@@ -569,7 +578,7 @@ def _consolidate_grouped_long(
             "provenance",
             "sig_warnings",
             *[
-                _field_struct_from_summary(fs, name).alias(name)
+                _field_struct_from_summary(name).alias(name)
                 for name in FIELD_NAMES
             ],
         )
@@ -607,7 +616,7 @@ def consolidate_auto(
         "conv_id",
         "turn_idx",
         contributions_array("extracted_text").alias("contribs"),
-    ).withColumn(id_col, best_extracted_id(F.col("contribs")))
+    ).withColumn(id_col, best_extracted_id("contribs"))
     t = with_runs(t, id_col=id_col)
     n_c = F.sum(
         F.size(F.coalesce(F.col("contribs"), F.array()))

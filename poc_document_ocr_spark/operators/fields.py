@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import FIELD_NAMES, IDENTIFIER_FIELD
+from ..session import per_gateway
 
 __all__ = [
     "extract_field_contributions",
@@ -44,6 +45,7 @@ def _pre_colon_key(line: Column) -> Column:
     return F.regexp_replace(F.substring_index(line, ":", 1), r"\s+$", "")
 
 
+@per_gateway
 def contributions_array(text_col: str = "extracted_text") -> Column:
     """Per-turn field contributions as an ``array<struct>`` column expression.
 
@@ -51,7 +53,8 @@ def contributions_array(text_col: str = "extracted_text") -> Column:
     (same regex, same field whitelist, same both-null drop rule) but with NO
     explode: the turn stays one row, so the consolidation path can run a
     single shuffle over turn-grain data. Entirely JVM-side higher-order
-    functions — stays in whole-stage codegen.
+    functions — stays in whole-stage codegen. Built once per JVM
+    (:func:`~poc_document_ocr_spark.session.per_gateway`).
     """
     lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
     # Cheap prefilter before the regex: a matching line's text before the
@@ -84,18 +87,20 @@ def contributions_array(text_col: str = "extracted_text") -> Column:
     )
 
 
+@per_gateway
 def best_extracted_id(
-    contribs_col: Column, id_field: str = IDENTIFIER_FIELD
+    contribs_col: str, id_field: str = IDENTIFIER_FIELD
 ) -> Column:
-    """Per-turn extracted identifier from a contributions array.
+    """Per-turn extracted identifier from the contributions array column
+    named ``contribs_col``.
 
     Shuffle-free equivalent of :func:`with_extracted_identifier`'s groupBy +
     join: highest confidence wins, tie → max trimmed value (same ordering
     struct). Whitespace-only values are null (TryExtractIdentifier parity,
-    ``DocumentAggregatorService.cs:78-100``).
+    ``DocumentAggregatorService.cs:78-100``). Built once per JVM.
     """
     cands = F.filter(
-        contribs_col,
+        F.col(contribs_col),
         lambda c: (c["field"] == id_field)
         & (F.trim(F.coalesce(c["raw_value"], F.lit(""))) != ""),
     )

@@ -1274,15 +1274,16 @@ _WS_RUN = "[ \\t\\n\\r\\f\\x0B]+"
 #: including vertical tab) + DEL — the bytes a curation pass strips
 #: before tokenization
 _CTRL = "[\\x00-\\x08\\x0E-\\x1F\\x7F]"
-#: the same fixed 27-char set as a literal string for ``translate()``
-#: deletion — strictly equivalent to ``regexp_replace(_, _CTRL, '')``
-#: (a fixed character class with empty replacement IS a character map),
-#: and the fast form: two regex PATTERNS in one task thrash the Java
-#: regex engine (~25× — the round-4 script_mix finding), so the control
-#: strip runs as a translate and only the whitespace-run collapse keeps
-#: its (irreducible) regex. Measured on the 1.88M-doc extracted corpus:
-#: normalize+quality pass 33 s → 7.5 s, output value-identical on every
-#: row (and the DuckDB oracle still replays the regex form — green).
+#: the same fixed 28-char set (9 + 18 + DEL) as a literal string for
+#: ``translate()`` deletion — strictly equivalent to
+#: ``regexp_replace(_, _CTRL, '')`` (a fixed character class with empty
+#: replacement IS a character map), and the fast form: two regex PATTERNS
+#: in one task thrash the Java regex engine (~25× — the round-4 script_mix
+#: finding), so the control strip runs as a translate and only the
+#: whitespace-run collapse keeps its (irreducible) regex. Measured on the
+#: 1.88M-doc extracted corpus: normalize+quality pass 33 s → 7.5 s, output
+#: value-identical on every row (and the DuckDB oracle still replays the
+#: regex form — green).
 _CTRL_CHARS = "".join(
     chr(c) for c in [*range(0x00, 0x09), *range(0x0E, 0x20), 0x7F]
 )

@@ -8,6 +8,19 @@ persist → checkpoint), as a Spark batch job:
     → field contributions → forward-fill runs → consolidation folds
     → duplicate-skip anti-join → append output → lineage row per partition
 
+Each bucket wave runs four actions, and the fold runs in exactly one:
+
+1. the rule-hit aggregate over the persisted extraction (``rule_hits``;
+   ``rows_in`` is their sum);
+2. the extracted-turns append (skipped when ``write_extracted`` is off or
+   the wave is empty), reading the persisted extraction;
+3. the output append: fold → duplicate-skip → write. Two
+   ``pyspark.sql.Observation`` metrics on it, one above the duplicate-skip
+   anti-join and one below, yield the record count and ``rows_out``
+   without re-running the fold. A wave with no new records (all
+   duplicates, or nothing extracted) appends a zero-row file;
+4. the lineage commit.
+
 Checkpoint/resume model (north rule): work is split into ``n_buckets`` hash
 buckets of ``conv_id`` (production: Iceberg ``bucket(N, conv_id)`` partitions,
 so each wave's scan prunes to its bucket — no full rescans). A lineage row is
@@ -28,7 +41,7 @@ import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregation import consolidate_auto, consolidate_compact
@@ -179,9 +192,12 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the pipeline; returns a summary dict.
 
-    One wave per remaining bucket: process → append output → commit lineage.
-    A killed run resumes by lineage anti-join; partially-written buckets are
-    healed by the doc_key duplicate-skip anti-join.
+    One wave per remaining bucket, four actions each: the rule-hit aggregate
+    over the persisted extraction, the extracted append, the output append
+    (the wave's only run of the fold, carrying the observed record counts
+    above and below the duplicate-skip), and the lineage commit. A killed
+    run resumes by lineage anti-join; partially-written buckets are healed
+    by the doc_key duplicate-skip anti-join.
     """
     raw = catalog.read(cfg.input_table)
     phys_buckets = catalog.bucket_values(cfg.input_table)
@@ -240,11 +256,11 @@ def run_pipeline(
         )
         extracted = extracted.persist()
         try:
-            rows_in = extracted.count()
             rule_hits = {
                 r["rule"]: r["count"]
                 for r in extracted.groupBy("rule").count().collect()
             }
+            rows_in = sum(rule_hits.values())
             if cfg.write_extracted and rows_in:
                 catalog.append(
                     extracted.withColumn("run_id", F.lit(cfg.run_id)),
@@ -259,17 +275,23 @@ def run_pipeline(
             records = _dedup_within_batch(records).withColumn(
                 "op_run_id", F.lit(cfg.run_id)
             )
-            n_records = records.count()
+            # the output append is the fold's only action: record counts
+            # above and below the duplicate-skip ride on it as observed
+            # metrics instead of re-running the fold in count jobs
+            seen, kept = Observation(), Observation()
+            records = records.observe(seen, F.count(F.lit(1)).alias("n"))
             if catalog.exists(cfg.output_table):
                 new_records = dedup_against_existing(
                     records, catalog.read(cfg.output_table)
                 )
             else:
                 new_records = records
-            rows_out = new_records.count()
-            summary["skipped_duplicates"] += n_records - rows_out
-            if rows_out:
-                catalog.append(new_records, cfg.output_table)
+            catalog.append(
+                new_records.observe(kept, F.count(F.lit(1)).alias("n")),
+                cfg.output_table,
+            )
+            rows_out = kept.get["n"]
+            summary["skipped_duplicates"] += seen.get["n"] - rows_out
             wall_ms = int((time.monotonic() - t0) * 1000)
             _commit_lineage(
                 spark, catalog, cfg, k, rows_in, rows_out, rule_hits, wall_ms,

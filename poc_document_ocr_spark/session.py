@@ -4,15 +4,19 @@ Local-mode settings mirror what a 1000-executor cluster deployment would set
 cluster-wide: AQE on (runtime re-plan + skew-join splitting), Arrow transport
 for the pandas-UDF extraction stage, UTC session time, shuffle partitions
 sized to the parallelism rather than the 200 default.
+
+Also home of :func:`per_gateway`, the memo for pure ``Column`` builders.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CPUS"]
+__all__ = ["get_spark", "DEFAULT_CPUS", "per_gateway"]
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -86,6 +90,14 @@ def get_spark(
         # re-executions drop to interpreted speed (6s folds became 60s on
         # random reps); a fixed 1g reserve is stable.
         .config("spark.driver.extraJavaOptions", _driver_java_opts())
+        # the compiled-class cache behind that code: a pipeline wave
+        # generates over 100 classes (fold, anti-join, appends), so the
+        # default 100-entry LRU would evict each class before the next wave
+        # asks for it again, and every wave would re-run Janino and re-warm
+        # the JIT on fresh classes — seconds of compiler work per wave whose
+        # timing varies run to run. With room for every plan shape, a
+        # repeated wave compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # AQE sizes broadcast candidates by COMPRESSED shuffle bytes; a
@@ -114,3 +126,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def per_gateway(builder):
+    """Memoize a pure ``Column`` builder per live JVM gateway.
+
+    Each ``F.*`` call is a py4j round trip, so a builder that returns the
+    same expression for the same (hashable, positional) arguments — the
+    consolidation fold's per-field structs, for example — pays thousands
+    of round trips per call. Column expressions are immutable and bound to no session, so
+    one build serves every plan on the same JVM. The memo is keyed on the
+    gateway object itself: a relaunched JVM gets a new gateway and the
+    memo rebuilds. ``builder.cache_clear()`` empties it.
+    """
+    state = {"gateway": None, "memo": {}}
+
+    @functools.wraps(builder)
+    def memoized(*args):
+        gateway = SparkContext._gateway
+        if gateway is None:
+            return builder(*args)
+        if state["gateway"] is not gateway:
+            state.update(gateway=gateway, memo={})
+        memo = state["memo"]
+        if args not in memo:
+            memo[args] = builder(*args)
+        return memo[args]
+
+    memoized.cache_clear = lambda: state.update(gateway=None, memo={})
+    return memoized

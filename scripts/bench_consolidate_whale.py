@@ -115,7 +115,7 @@ def main() -> None:
     t = both.select(
         "conv_id", "turn_idx",
         contributions_array("extracted_text").alias("contribs"),
-    ).withColumn("extracted_id", best_extracted_id(F.col("contribs")))
+    ).withColumn("extracted_id", best_extracted_id("contribs"))
     t = with_runs(t, id_col="extracted_id")
     routed = (
         t.groupBy("conv_id", "run_id")

@@ -11,9 +11,11 @@ threads sharing one JVM. Efficiency = (T_4N / T_N) / 4.
 
 Usage::
 
-    python scripts/bench_scaling.py [sf_dir] [cluster|local] [lo hi]
+    python scripts/bench_scaling.py [sf_dir] [cluster [lo_execs lo_cores hi_execs hi_cores]]
+    python scripts/bench_scaling.py [sf_dir] local [lo [hi]]
 
-``cluster`` (default): local-cluster[1,8] vs local-cluster[4,8].
+``cluster`` (default): local-cluster[1,2] vs local-cluster[4,2]; a shape
+must give all four numbers or none.
 ``local``: shared-JVM local[lo] vs local[hi] (default 8 vs 32) — reported
 for comparison; thread-mode numbers under-measure a real cluster (one
 shared heap/GC and one codegen cache for all "executors").
@@ -98,9 +100,16 @@ def main() -> None:
         # the shape is now an argument:
         #   python scripts/bench_scaling.py [sf_dir] cluster [lo_execs
         #   lo_cores hi_execs hi_cores]   (default 1 2 4 2)
-        le, lc, he, hc = (
-            [int(x) for x in sys.argv[3:7]] if len(sys.argv) > 6 else (1, 2, 4, 2)
-        )
+        shape = sys.argv[3:]
+        if len(shape) not in (0, 4):
+            print(
+                "usage: bench_scaling.py [sf_dir] cluster "
+                "[lo_execs lo_cores hi_execs hi_cores] — give all four "
+                f"shape numbers or none, got {shape}",
+                file=sys.stderr,
+            )
+            sys.exit(2)
+        le, lc, he, hc = [int(x) for x in shape] if shape else (1, 2, 4, 2)
         lo = {"sf_dir": sf_dir, "cpus": le * lc, "executors": (le, lc)}
         hi = {"sf_dir": sf_dir, "cpus": he * hc, "executors": (he, hc)}
         label_lo = f"local-cluster[{le},{lc}] ({le * lc} cores)"

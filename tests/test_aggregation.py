@@ -347,6 +347,86 @@ def test_consolidate_auto_equals_compact_at_any_threshold(spark):
         assert compact.exceptAll(auto).count() == 0
 
 
+def _fold_builders():
+    from poc_document_ocr_spark.operators import aggregation, fields
+
+    return (
+        fields.contributions_array,
+        fields.best_extracted_id,
+        aggregation._field_struct,
+        aggregation._field_struct_from_summary,
+        aggregation._header_agg_exprs,
+        aggregation._doc_key_expr,
+    )
+
+
+def _table_hash(df):
+    """Order-insensitive hash of every column of every row."""
+    h = F.xxhash64(*[F.col(c) for c in sorted(df.columns)]).alias("_h")
+    row = df.select(h).agg(
+        F.count(F.lit(1)), F.sum(F.col("_h").cast("decimal(20,0)"))
+    ).first()
+    return row[0], str(row[1])
+
+
+def test_fold_expressions_built_once_per_session(spark):
+    """The fold's Column builders are memoized per JVM gateway: a second
+    consolidate_stage build reuses the cached expressions (same objects,
+    a fraction of the py4j round trips), and its output hashes equal to a
+    build made after the cache is cleared."""
+    from poc_document_ocr_spark.operators.aggregation import (
+        _field_struct,
+        consolidate_auto,
+        consolidate_compact,
+    )
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
+    from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
+    from poc_document_ocr_spark.sources.datagen import generate
+
+    data = generate(n_convs=12, median_turns=6, seed=7, skew=False)
+    ex = extract_turns(
+        spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
+    ).localCheckpoint()
+
+    client = spark.sparkContext._gateway._gateway_client
+    orig_send = client.send_command
+    sent = {"n": 0}
+
+    def counting_send(*args, **kwargs):
+        sent["n"] += 1
+        return orig_send(*args, **kwargs)
+
+    def build():
+        sent["n"] = 0
+        client.send_command = counting_send
+        try:
+            out = consolidate_stage(ex, long_doc_threshold=1_000_000)
+        finally:
+            client.send_command = orig_send
+        return out, sent["n"]
+
+    for b in _fold_builders():
+        b.cache_clear()
+    cold, cold_cmds = build()
+    cached = _field_struct("firstName")
+    warm, warm_cmds = build()
+    assert _field_struct("firstName") is cached
+    assert warm_cmds * 3 < cold_cmds, (warm_cmds, cold_cmds)
+
+    for b in _fold_builders():
+        b.cache_clear()
+    assert _field_struct("firstName") is not cached
+    rebuilt, _ = build()
+    assert warm.columns == rebuilt.columns == cold.columns
+    assert _table_hash(warm) == _table_hash(rebuilt)
+
+    # the long route (every document) still equals the compact route
+    compact = consolidate_compact(ex)
+    assert _table_hash(consolidate_auto(ex, threshold=0)) == \
+        _table_hash(compact) == _table_hash(warm)
+
+
 def test_consolidate_auto_million_contribution_conversation(spark):
     """North-rule skew guard: ONE conversation with 10⁶ field lines routes
     through the long fold and completes with exact merge-rule output. The

@@ -79,6 +79,18 @@ def test_html_entity_decoding_with_spans():
     rebuilt = "".join(html_mod.unescape(html[s:e]) for s, e in r.spans)
     assert rebuilt == r.extracted_text
 
+    # a ref without ';' ends before its terminator: its span must not reach
+    # into the next segment (span_lint's non-overlap invariant)
+    html = "<article><p>Tom &amp Jerry &#38 friends</p></article>"
+    r = extract_html(html)
+    assert r.extracted_text == "Tom & Jerry & friends"
+    assert [html[s:e] for s, e in r.spans] == [
+        "Tom ", "&amp", " Jerry ", "&#38", " friends",
+    ]
+    assert all(a[1] <= b[0] for a, b in zip(r.spans, r.spans[1:]))
+    rebuilt = "".join(html_mod.unescape(html[s:e]) for s, e in r.spans)
+    assert rebuilt == r.extracted_text
+
 
 def test_html_nested_markup_inline_tags():
     html = "<main><p>Hello <b>brave</b> new <i>world</i></p></main>"

@@ -102,6 +102,7 @@ _EDGE_CASES = [
     # entity / char refs
     "<p>a &amp; b</p>",
     "<p>a &amp b</p>",  # no semicolon: terminator not consumed
+    "<article><p>Tom &amp Jerry &lt;3 &#38 co</p></article>",
     "<p>R&D dept</p>",  # &D parses as entityref with space terminator
     "<p>a & b</p>",  # bare ampersand -> data("&")
     "<p>5 &lt;&gt; 6</p>",
@@ -144,6 +145,29 @@ _EDGE_CASES = [
 @pytest.mark.parametrize("case", _EDGE_CASES, ids=range(len(_EDGE_CASES)))
 def test_fast_equals_slow_edge_cases(case):
     _eq(case)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "<article><p>Tom &amp Jerry</p></article>",
+        "<p>&#38 no-semi &#x26 hex &amp; semi</p>",
+        "<main>5 &lt 6 &gt 2 &lt;x&gt</main>",
+    ],
+)
+def test_ref_without_semicolon_spans_cover_consumed_source(case):
+    """A ref that ends without ';' does not consume its terminator, so its
+    span must stop before it: both backends agree, spans stay in source
+    order without overlap, and each span's source decodes to its text."""
+    import html as html_mod
+
+    _eq(case)
+    for r in (extract_html(case), extract_html_slow(case)):
+        assert r.spans
+        assert all(s < e for s, e in r.spans)
+        assert all(a[1] <= b[0] for a, b in zip(r.spans, r.spans[1:]))
+        rebuilt = "".join(html_mod.unescape(case[s:e]) for s, e in r.spans)
+        assert rebuilt == r.extracted_text
 
 
 def test_marked_section_bails_to_twin():

@@ -386,3 +386,53 @@ def test_catalog_compaction_recovers_from_crash_windows(spark, tmp_path):
     assert sorted(r["id"] for r in cat.read("t").collect()) == before
     assert not os.path.exists(path + "__compact_old")
     assert not os.path.exists(path + "__compact_tmp")
+
+
+def test_pipeline_runs_the_fold_once_per_wave(spark, turns_df, data, tmp_path,
+                                              monkeypatch):
+    """A wave runs no count job: rows_in comes from the rule-hit aggregate
+    and the record counts from observations on the output append. The
+    counters must still match the golden fixture, on a first run and on a
+    duplicate-only re-run."""
+    from poc_document_ocr_spark.operators.aggregation import consolidate_auto
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write_overwrite(turns_df, "transcripts")
+    # golden record count: the independent long-format fold route
+    n_docs = consolidate_auto(extract_stage(turns_df), threshold=0).count()
+
+    df_cls = type(turns_df)
+    counts = {"n": 0}
+    orig_count = df_cls.count
+
+    def counting(self):
+        counts["n"] += 1
+        return orig_count(self)
+
+    monkeypatch.setattr(df_cls, "count", counting)
+    cfg = PipelineConfig(
+        run_id="run-1", n_buckets=3, output_table="out_o",
+        extracted_table="ext_o", lineage_table="lin_o",
+    )
+    first = run_pipeline(spark, cat, cfg)
+    cfg.run_id = "run-2"
+    again = run_pipeline(spark, cat, cfg)
+    assert counts["n"] == 0, f"run_pipeline called DataFrame.count {counts['n']}x"
+    monkeypatch.undo()
+
+    assert first["skipped_duplicates"] == 0
+    assert again["skipped_duplicates"] == n_docs
+    for summary, rows_out in ((first, n_docs), (again, 0)):
+        buckets = summary["buckets"]
+        assert [b["status"] for b in buckets] == ["Succeeded"] * 3
+        assert sum(b["rows_in"] for b in buckets) == len(data.golden)
+        assert sum(b["rows_out"] for b in buckets) == rows_out
+        lin = cat.read("lin_o").filter(
+            F.col("run_id") == summary["run_id"]
+        ).collect()
+        assert sorted((r.partition_id, r.rows_in, r.rows_out) for r in lin) == \
+            sorted((b["partition_id"], b["rows_in"], b["rows_out"])
+                   for b in buckets)
+        # rows_in is the rule-hit total of the same wave
+        assert all(sum(r.rule_hits.values()) == r.rows_in for r in lin)
+    assert cat.read("out_o").count() == n_docs
